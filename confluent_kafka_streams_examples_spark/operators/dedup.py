@@ -900,11 +900,11 @@ def minhash_estimate_pairs(
         .distinct()
     )
     sa = sig.selectExpr(
-        f"{id_col} as id_a",
+        f"`{id_col}` as id_a",
         *[f"mh{j} as a{j}" for j in range(num_hashes)],
     )
     sb = sig.selectExpr(
-        f"{id_col} as id_b",
+        f"`{id_col}` as id_b",
         *[f"mh{j} as b{j}" for j in range(num_hashes)],
     )
     match_terms = " + ".join(

@@ -5,8 +5,10 @@ Scale notes (100 TB design):
 - AQE is enabled: runtime coalescing of shuffle partitions, skew-join
   splitting, and dynamic broadcast conversion replace hand-tuned
   ``spark.sql.shuffle.partitions`` at cluster scale.
-- ``shuffle.partitions`` default here (32) matches local[32]; on a real
-  cluster this is set to 2-3x total cores and AQE coalesces down.
+- ``SPARK_GRAFT_CPUS`` sizes ``local[N]`` and the default
+  ``shuffle.partitions`` alike; unset, it is the number of CPUs this
+  process may run on.  On a real cluster shuffle partitions are set to
+  2-3x total cores and AQE coalesces down.
   Override locally with ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` (the scale
   probe's ``--shuffle-partitions=`` uses it to demonstrate that x1000
   spills are rig artifacts: same plan, cluster-shaped partition count
@@ -45,7 +47,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def get_spark(app_name: str = "confluent-kafka-streams-examples-spark") -> SparkSession:
     """Build (or reuse) a SparkSession tuned for local[N] testing but with
     configs that carry to a multi-executor cluster unchanged."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     # shuffle/spill files on tmpfs when available: this host's block
     # device is slow enough to dominate small-shuffle latency (measured
     # 25x on a 260k-row distinct); on a real cluster spark.local.dir is
@@ -100,7 +102,9 @@ def _resolved_schema(spark: SparkSession, path: str, stamp_path: str | None = No
     schemas-from-a-catalog shape a production metastore provides.
 
     The cache key carries the file's mtime+size, so a regenerated
-    table re-infers instead of reading stale metadata.  ``stamp_path``
+    table re-infers instead of reading stale metadata; when the stamp
+    cannot be read, nothing is cached and every call infers fresh (a
+    ``None`` stamp would pin the first schema forever).  ``stamp_path``
     substitutes a different file for the staleness stamp — artifact
     directories use their write-once manifest, because the directory's
     own mtime is touched on every read-refresh.  Only the SCHEMA is
@@ -109,14 +113,13 @@ def _resolved_schema(spark: SparkSession, path: str, stamp_path: str | None = No
     calls resolve exactly as before."""
     try:
         st = os.stat(stamp_path if stamp_path is not None else path)
-        stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
-        stamp = None
+        return spark.read.parquet(path).schema
     cache = getattr(spark, "_ckse_schema_cache", None)
     if cache is None:
         cache = {}
         spark._ckse_schema_cache = cache
-    key = (path, stamp)
+    key = (path, (st.st_mtime_ns, st.st_size))
     schema = cache.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema

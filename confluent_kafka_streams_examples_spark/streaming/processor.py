@@ -6,8 +6,8 @@ put back — :60-67) and a *punctuator* that every 10s of stream time
 scans the store and forwards every (key, total) downstream (:43-58).
 
 Spark twin: ``applyInPandasWithState`` — the state store replaces the
-KeyValueStore (checkpointed, per-key, partition-parallel), and emission
-happens when a micro-batch touches a key (update semantics) or when the
+KeyValueStore (checkpointed, partition-parallel), and emission happens
+when a micro-batch touches a key (update semantics) or when the
 configured timeout fires (punctuate semantics).
 
 Documented mapping (SURVEY §7 M5): Kafka Streams punctuates on *stream
@@ -19,8 +19,8 @@ boundaries — same totals, same keys, trigger-aligned timing.
 
 from __future__ import annotations
 
+import pickle
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
@@ -36,10 +36,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-STATE_SCHEMA = StructType(
-    [StructField("total", DoubleType()), StructField("n", LongType())]
-)
-
 OUTPUT_SCHEMA = StructType(
     [
         StructField("key", StringType()),
@@ -48,135 +44,71 @@ OUTPUT_SCHEMA = StructType(
     ]
 )
 
-
-def running_total_with_emission(
-    stream: DataFrame,
-    key_col: str,
-    value_col: str,
-    emit_every_ms: int | None = None,
-) -> DataFrame:
-    """Per-key running sum with optional periodic re-emission.
-
-    - Each micro-batch: fold new rows into state, emit updated totals
-      (A2/A3 continuous-refinement semantics).
-    - ``emit_every_ms``: also re-emit every key's current total on a
-      processing-time timeout — the punctuator (A4) analog.
-
-    Returns an update-mode streaming DataFrame (key, total, n).
-
-    Null-key records are DROPPED before the fold — the reference
-    semantics: Kafka Streams' groupByKey discards null-key records
-    ahead of any aggregation (KGroupedStream contract;
-    AggregationsExample.scala's groupBy upstream of :36-44), and the
-    JVM-side filter keeps the guarantee identical between this per-key
-    variant and :func:`running_total_bucketed` (whose pandas groupby
-    would otherwise silently drop them on its own — ADVICE r9).
-
-    CAUTION: with ``emit_every_ms`` set, armed timers continuously
-    schedule micro-batches, so ``query.processAllAvailable()`` never
-    settles — drive such queries with sink polling or awaitTermination
-    (see tests/test_examples.py::test_processor_pipeline_punctuate_reemission).
-    """
-    stream = stream.filter(F.col(key_col).isNotNull())
-
-    def fold(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            total, n = state.get
-        else:
-            total, n = 0.0, 0
-        saw_data = False
-        for pdf in pdfs:
-            if len(pdf):
-                saw_data = True
-                total += float(pdf[value_col].sum())
-                n += int(len(pdf))
-        state.update((total, n))
-        if emit_every_ms is not None:
-            state.setTimeoutDuration(emit_every_ms)
-        if saw_data or (state.hasTimedOut if emit_every_ms is not None else False):
-            yield pd.DataFrame({"key": [str(key[0])], "total": [total], "n": [n]})
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if emit_every_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return stream.groupBy(key_col).applyInPandasWithState(
-        fold,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=timeout,
-    )
-
-
 # ---------------------------------------------------------------------------
-# Bucketed variant — the high-key-cardinality fast path (VERDICT r8 #1).
+# State layout: hash buckets of keys, not keys.
 #
-# Per-key grouping pays one Python fold invocation per touched key per
-# micro-batch (~2 ms of pandas + marshalling each): the measured
-# 32k -> 11k rows/s cliff from 10k to 1M keys (SCALE.md state decades).
-# Here the state key is pmod(xxhash64(key), n_buckets) and the state
-# value is ONE pickled dict {key: (total, n)} for every key in the
-# bucket, so the per-call overhead amortizes across all of them and
-# emission is one wide frame per bucket.  Python calls per batch are
-# bounded by n_buckets regardless of key cardinality.
+# applyInPandasWithState invokes the Python fold once per GROUP per
+# micro-batch (~2 ms of pandas + marshalling each); grouping by key made
+# that one call per touched key — the measured 32k -> 11k rows/s cliff
+# from 10k to 1M keys (SCALE.md state decades).  Here the state key is
+# pmod(xxhash64(key), n_buckets) and the state value is ONE pickled
+# dict {key: (total, n)} for every key in the bucket, so the per-call
+# overhead amortizes across all of them and emission is one wide frame
+# per bucket.  Python calls per batch are bounded by n_buckets
+# regardless of key cardinality.
 #
 # Sizing at scale: ~60 bytes/key pickled => a 1k-key bucket is a
 # ~60 KB RocksDB value, rewritten per touched bucket per batch; pick
 # n_buckets ~ keys / 1000 to hold that constant (same rule as
-# funnel_stage_stream_bucketed — see streaming/funnel.py for the full
-# rationale).
+# funnel_stage_stream — see streaming/funnel.py).
 #
-# The punctuator (emit_every_ms) rides the SAME bucket blob (VERDICT
-# r9 #3): each key's NEXT-FIRE time is stored alongside its total, the
-# bucket's single processing-time timeout is armed at the MIN next-fire
-# across its keys, and a firing (or any data batch) re-emits exactly
-# the keys that are DUE — per-key cadence preserved (each key re-emits
-# emit_every_ms after its own last activity, independent of bucket
-# siblings), Python invocations still bounded by n_buckets.  A naive
-# bucket-level timeout that re-emitted whole buckets would change A4's
-# per-key cadence contract; emitting only due keys does not.
+# The punctuator (emit_every_ms) rides the SAME bucket blob: each key's
+# NEXT-FIRE time is stored alongside its total, the bucket's single
+# processing-time timeout is armed at the MIN next-fire across its
+# keys, and a firing (or any data batch) re-emits exactly the keys that
+# are DUE — per-key cadence preserved (each key re-emits emit_every_ms
+# after its own last activity, independent of bucket siblings).
 #
 # Reference analog unchanged: per-key KeyValueStore fold + punctuator
 # (ProcessorApiExample.scala:43-67); a bucket is the store partition
 # made explicit.
 # ---------------------------------------------------------------------------
 
-BUCKET_STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
+STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
 
 
-def running_total_bucketed(
+def running_total_with_emission(
     stream: DataFrame,
     key_col: str,
     value_col: str,
-    n_buckets: int = 1024,
     emit_every_ms: int | None = None,
+    n_buckets: int = 1024,
 ) -> DataFrame:
-    """Per-key running sum with per-BUCKET state: identical update-mode
-    (key, total, n) output to :func:`running_total_with_emission`,
-    vectorized across every key in a hash bucket per micro-batch.
+    """Per-key running sum with optional periodic re-emission.
 
-    ``emit_every_ms`` is the punctuator (A4) at bucket granularity
-    with PER-KEY cadence: every key's next-fire time lives in the
-    bucket blob, the bucket's one processing-time timeout is armed at
-    the min next-fire of its keys, and a firing re-emits only the keys
-    that are due (then re-arms them) — so each key re-emits
-    emit_every_ms after its own last activity exactly as the per-key
-    punctuator does, while Python invocations per trigger stay bounded
-    by n_buckets regardless of key cardinality.
+    - Each micro-batch: fold new rows into state, emit updated totals
+      (A2/A3 continuous-refinement semantics).
+    - ``emit_every_ms``: also re-emit a key's current total once it has
+      been idle that long — the punctuator (A4) analog.  Every key's
+      next-fire time lives in its bucket's blob, the bucket's one
+      processing-time timeout is armed at the min next-fire of its
+      keys, and a firing re-emits only the keys that are due.
+    - ``n_buckets``: state-store groups the keys are hashed into (see
+      the block comment above for the sizing rule).
 
-    Null keys are dropped JVM-side before bucketing — the same
-    groupByKey null-drop guard as the per-key variant (reference
-    semantics), made EXPLICIT here because the pandas groupby inside
-    the fold would otherwise drop them silently (dropna default) while
-    claiming output parity.
+    Returns an update-mode streaming DataFrame (key, total, n).
 
-    CAUTION (same as the per-key variant): an armed processing-time
-    timeout continuously schedules micro-batches, so
-    ``processAllAvailable()`` never settles — poll the sink instead.
+    Null-key records are DROPPED before the fold — the reference
+    semantics: Kafka Streams' groupByKey discards null-key records
+    ahead of any aggregation (KGroupedStream contract;
+    AggregationsExample.scala's groupBy upstream of :36-44).  The drop
+    is explicit and JVM-side because the pandas groupby inside the fold
+    would otherwise drop them silently (dropna default).
+
+    CAUTION: with ``emit_every_ms`` set, armed timers continuously
+    schedule micro-batches, so ``query.processAllAvailable()`` never
+    settles — drive such queries with sink polling or awaitTermination
+    (see tests/test_examples.py::test_processor_pipeline_punctuate_reemission).
 
     Toggling ``emit_every_ms`` between None and set requires a FRESH
     checkpoint: the timeout adds an internal state column
@@ -184,8 +116,6 @@ def running_total_bucketed(
     clear incompatibility error (pytest-pinned).  Defensively, the fold
     also upgrades any legacy 2-tuple (total, n) entries to
     (total, n, next_fire) before reading next-fire times."""
-    import pickle
-
     stream = stream.filter(F.col(key_col).isNotNull())
     src = stream.select(
         F.col(key_col).cast("string").alias("key"),
@@ -226,25 +156,22 @@ def running_total_bucketed(
         out_k: list[str] = []
         out_t: list[float] = []
         out_n: list[int] = []
-        emitted: set[str] = set()
+        emitted: dict[str, None] = {}
         if chunks:
             pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-            # one C-level groupby over the bucket's rows, then a Python
-            # loop over TOUCHED keys only (~rows/n_buckets per call)
-            g = pdf.groupby("key", sort=False)["value"].agg(["sum", "size"])
-            for k, s, c in zip(
-                g.index, g["sum"].to_numpy(), g["size"].to_numpy()
-            ):
+            keys = pdf["key"].tolist()
+            # a plain loop over the bucket's rows (~rows/n_buckets per
+            # call): a pandas groupby costs ~0.6 ms per call whatever
+            # the row count, more than the loop up to thousands of rows.
+            # A null value adds nothing to the total but counts in n.
+            for k, v in zip(keys, pdf["value"].fillna(0.0).tolist()):
                 rec = totals.get(k)
-                total, n = (rec[0], rec[1]) if rec else (0.0, 0)
-                total += float(s)
-                n += int(c)
-                totals[k] = (
-                    (total, n)
-                    if emit_every_ms is None
-                    else (total, n, now + emit_every_ms)
-                )
-                emitted.add(k)
+                totals[k] = (rec[0] + v, rec[1] + 1) if rec else (v, 1)
+            emitted = dict.fromkeys(keys)
+            for k in emitted:
+                total, n = totals[k][:2]
+                if emit_every_ms is not None:
+                    totals[k] = (total, n, now + emit_every_ms)
                 out_k.append(k)
                 out_t.append(total)
                 out_n.append(n)
@@ -273,7 +200,7 @@ def running_total_bucketed(
     return src.groupBy("bucket").applyInPandasWithState(
         fold,
         outputStructType=OUTPUT_SCHEMA,
-        stateStructType=BUCKET_STATE_SCHEMA,
+        stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=timeout,
     )

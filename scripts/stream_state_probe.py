@@ -9,7 +9,8 @@ fixed input volume?  The three pillars exercised are the ones whose
 state scales differently by construction:
 
 - latest_per_key   : state rows == distinct keys (grows with K)
-- running_total    : state rows == distinct keys (grows with K)
+- running_total    : state rows == hash buckets (<= n_buckets), each
+                     bucket's blob grows with K
 - dedup_watermark  : state rows bounded by the watermark horizon
                      (rate x delay), NOT by K — the bounded-state claim
                      SCALE.md makes is falsifiable here
@@ -102,14 +103,6 @@ def _p_latest(spark, path):
     return latest_per_key_stream(_read(spark, path), "key", "ts", ["value"]), "update"
 
 
-def _p_total(spark, path):
-    from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_with_emission,
-    )
-
-    return running_total_with_emission(_read(spark, path), "key", "value"), "update"
-
-
 def _p_dedup(spark, path):
     from confluent_kafka_streams_examples_spark.streaming.dedup import (
         dedup_within_watermark,
@@ -123,19 +116,6 @@ def _p_dedup(spark, path):
     )
 
 
-def _p_funnel(spark, path):
-    # stage-machine state: 3 longs per user — the same keyed-state
-    # class as running_total but with branchy per-batch logic; the
-    # probe asks whether the state machine changes the K-scaling story
-    from confluent_kafka_streams_examples_spark.streaming.funnel import (
-        bench_stream_to_funnel_columns,
-        funnel_stage_stream,
-    )
-
-    src = bench_stream_to_funnel_columns(_read(spark, path))
-    return funnel_stage_stream(src), "update"
-
-
 def _buckets_for(n_keys: int) -> int:
     # the SCALE.md sizing rule: n_buckets ~ keys/1000 keeps each bucket
     # blob at a rewrite-friendly ~32-60 KB while staying >> core count
@@ -143,15 +123,14 @@ def _buckets_for(n_keys: int) -> int:
 
 
 def _p_total_bucketed(spark, path, n_keys=BASE_KEYS):
-    # bucketed-state twin (VERDICT r8 #1): same (key, total, n) output,
     # state key = hash bucket, one pickled {key: (total, n)} map per
     # bucket — Python calls per batch bounded by n_buckets, not K
     from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
+        running_total_with_emission,
     )
 
     return (
-        running_total_bucketed(
+        running_total_with_emission(
             _read(spark, path), "key", "value", n_buckets=_buckets_for(n_keys)
         ),
         "update",
@@ -159,16 +138,18 @@ def _p_total_bucketed(spark, path, n_keys=BASE_KEYS):
 
 
 def _p_funnel_bucketed(spark, path, n_keys=BASE_KEYS):
-    # bucketed-state twin of funnel_stages: packed (user,t1,t2,t3)
-    # vector per bucket, numpy min-cascade across the whole bucket
+    # stage-machine state: 3 longs per user packed into one
+    # (user,t1,t2,t3) vector per bucket, numpy min-cascade across the
+    # whole bucket — the probe asks whether the state machine's branchy
+    # per-batch logic changes the K-scaling story of the running total
     from confluent_kafka_streams_examples_spark.streaming.funnel import (
         bench_stream_to_funnel_columns,
-        funnel_stage_stream_bucketed,
+        funnel_stage_stream,
     )
 
     src = bench_stream_to_funnel_columns(_read(spark, path))
     return (
-        funnel_stage_stream_bucketed(src, n_buckets=_buckets_for(n_keys)),
+        funnel_stage_stream(src, n_buckets=_buckets_for(n_keys)),
         "update",
     )
 
@@ -202,13 +183,13 @@ def _p_total_punctuated(spark, path, n_keys=BASE_KEYS):
     # 2 s cadence is far shorter than the drain, so several punctuate
     # rounds fire DURING ingestion and their cost lands inside the
     # measured per-batch durations — the probe asks whether that cost
-    # bends with K the way the per-key punctuator's Python floor did.
+    # bends with K.
     from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
+        running_total_with_emission,
     )
 
     return (
-        running_total_bucketed(
+        running_total_with_emission(
             _read(spark, path),
             "key",
             "value",
@@ -221,11 +202,9 @@ def _p_total_punctuated(spark, path, n_keys=BASE_KEYS):
 
 PILLARS = [
     ("latest_per_key", _p_latest),
-    ("running_total", _p_total),
-    ("running_total_bucketed", _p_total_bucketed),
+    ("running_total", _p_total_bucketed),
     ("running_total_punctuated", _p_total_punctuated),
     ("dedup_watermark", _p_dedup),
-    ("funnel_stages", _p_funnel),
     ("funnel_bucketed", _p_funnel_bucketed),
     ("funnel_exact", _p_funnel_exact),
 ]
@@ -354,7 +333,10 @@ def _soak(
             )
 
             df = running_total_with_emission(
-                _read(spark, path), "key", "value"
+                _read(spark, path),
+                "key",
+                "value",
+                n_buckets=_buckets_for(n_keys),
             )
         t0 = time.perf_counter()
         q = (

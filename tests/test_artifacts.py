@@ -40,6 +40,27 @@ def test_artifact_path_tracks_engine_version(tmp_path, monkeypatch):
     assert art.artifact_path(str(src), "t") != p1
 
 
+def test_resolved_schema_unreadable_stamp_is_never_cached(tmp_path, spark):
+    """A stamp that cannot be stat'ed must not be cached under a None
+    stamp: that entry would serve the first schema for the rest of the
+    session, even after the file is regenerated."""
+    from confluent_kafka_streams_examples_spark.session import _resolved_schema
+
+    path = str(tmp_path / "t.parquet")
+    missing = str(tmp_path / "no-manifest")
+    spark.range(3).write.parquet(path)
+    first = _resolved_schema(spark, path, stamp_path=missing)
+    spark.range(3).selectExpr("id", "id * 2 AS twice").write.mode(
+        "overwrite"
+    ).parquet(path)
+    second = _resolved_schema(spark, path, stamp_path=missing)
+    assert first.names == ["id"]
+    assert second.names == ["id", "twice"]
+    cache = getattr(spark, "_ckse_schema_cache", {})
+    assert (path, None) not in cache
+    assert not [k for k in cache if k[0] == path]
+
+
 def test_materialized_cleans_staging_on_build_failure(tmp_path, spark):
     """A failed build must leave neither a published artifact nor an
     orphaned staging directory, and the cleanup hook still runs."""

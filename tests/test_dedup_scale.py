@@ -172,6 +172,20 @@ def test_minhash_estimate_identical_docs(spark):
     assert got == {(1, 2): (16, 1.0)}
 
 
+def test_minhash_estimate_accepts_id_column_needing_quotes(spark):
+    """The verify join's SQL-string projection must quote the id column:
+    a hyphenated name parses as subtraction when interpolated bare."""
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    df = _docs(spark, [(1, text), (2, text)]).withColumnRenamed("doc_id", "doc-id")
+    got = [
+        (r.id_a, r.id_b, r.matching)
+        for r in dedup.minhash_estimate_pairs(
+            df, "doc-id", "text", min_matching=8
+        ).collect()
+    ]
+    assert got == [(1, 2, 16)]
+
+
 def test_incremental_pairs_never_pair_old_with_old(spark):
     text = "one two three four five six seven eight nine ten eleven twelve"
     corpus = _docs(spark, [(1, text), (2, text), (3, "other corpus content entirely distinct")])

@@ -246,6 +246,51 @@ def test_running_total_across_batches(spark, tmp_path):
     assert [(r["total"], r["n"]) for r in rows] == [(3.0, 2), (7.0, 3)]
 
 
+def test_rocksdb_state_store_provider(spark, tmp_path):
+    """U2 at scale: the running-total fold, state hosted by the RocksDB
+    provider (out-of-heap, incremental snapshots — the 100 TB key-space
+    configuration).  Asserts continuity across batches AND that the
+    state operator reports rocksdb metrics (i.e. the provider really
+    was RocksDB, not the default HDFS-backed heap map)."""
+    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    src = str(tmp_path / "src")
+    try:
+        write_batch(spark, src, [("a", 1.0, T0), ("a", 2.0, T0), ("b", 5.0, T0)])
+        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
+        totals = running_total_with_emission(stream, "key", "value")
+        qname = f"q{uuid.uuid4().hex[:8]}"
+        q = (
+            totals.writeStream.format("memory")
+            .queryName(qname)
+            .outputMode("update")
+            .option("checkpointLocation", f"{tmp_path}/ckpt")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            write_batch(spark, src, [("a", 4.0, T0)])
+            q.processAllAvailable()
+            progress = q.lastProgress
+        finally:
+            q.stop()
+        rows = spark.sql(f"SELECT * FROM {qname} ORDER BY key, n").collect()
+        finals = {}
+        for r in rows:
+            finals[r["key"]] = (r["total"], r["n"])
+        assert finals == {"a": (7.0, 3), "b": (5.0, 1)}
+        metrics = progress["stateOperators"][0]["customMetrics"]
+        assert any(k.startswith("rocksdb") for k in metrics), metrics
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        else:
+            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+
+
 def test_dead_letter_policy(spark):
     """E1/E4 (reference ErrorHandlingExample.scala:32-47 + circe
     drop-on-failure): poison records skipped + counted; threshold fails."""
@@ -476,17 +521,12 @@ def test_state_probe_pillars_construct(spark, tmp_path):
 
 
 def test_running_total_bucketed_matches_per_key(spark, tmp_path):
-    """Bucketed-state running total (streaming/processor.py, the
-    high-cardinality fast path): identical (key, total, n) results to
-    the per-key fold across multi-batch refinement, with keys spread
-    over many buckets — plus the pickled bucket map must survive the
-    state-store round trip between batches.  Null-key rows are mixed
-    in and must be DROPPED (the groupByKey null-drop guard both
-    variants share — ADVICE r9), not folded or emitted as 'None'."""
-    from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
-    )
-
+    """Bucketed-state running total (streaming/processor.py): exact
+    per-key (key, total, n) results across multi-batch refinement, with
+    several keys sharing each bucket — plus the pickled bucket map must
+    survive the state-store round trip between batches.  Null-key rows
+    are mixed in and must be DROPPED (the groupByKey null-drop guard),
+    not folded or emitted as 'None'."""
     src = str(tmp_path / "src")
     rows = []
     for k in range(40):
@@ -495,7 +535,7 @@ def test_running_total_bucketed_matches_per_key(spark, tmp_path):
     rows += [(None, 999.0, ts(1)), (None, 1.0, ts(2))]
     write_batch(spark, src, rows)
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
-    totals = running_total_bucketed(stream, "key", "value", n_buckets=8)
+    totals = running_total_with_emission(stream, "key", "value", n_buckets=8)
     qname = f"tb{uuid.uuid4().hex[:8]}"
     q = (
         totals.writeStream.format("memory")
@@ -647,22 +687,18 @@ def test_latest_per_key_random_stream_matches_batch(spark, tmp_path):
 def test_running_total_bucketed_punctuator_per_key_cadence(spark, tmp_path):
     """The bucketed punctuator (A4 at high key cardinality): with
     emit_every_ms set, a key re-emits its CURRENT total on timeout even
-    when later batches carry no rows for it — the same contract as the
-    per-key punctuator (reference ProcessorApiExample.scala:43-58) —
-    and only DUE keys re-emit, not whole buckets: a key that just
-    received data is re-armed, not double-emitted."""
+    when later batches carry no rows for it — the reference's per-key
+    punctuator contract (ProcessorApiExample.scala:43-58) — and only
+    DUE keys re-emit, not whole buckets: a key that just received data
+    is re-armed, not double-emitted."""
     import time as _time
-
-    from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
-    )
 
     src = str(tmp_path / "src")
     write_batch(spark, src, [("a", 5.0, ts(0)), ("c", 2.0, ts(0))])
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
     # n_buckets=1: 'a' and 'c' share one bucket and ONE bucket timer,
     # yet must keep independent per-key cadence
-    totals = running_total_bucketed(
+    totals = running_total_with_emission(
         stream, "key", "value", n_buckets=1, emit_every_ms=100
     )
     qname = f"bp{uuid.uuid4().hex[:8]}"
@@ -718,10 +754,6 @@ def test_bucketed_punctuator_toggle_on_restart(spark, tmp_path):
     import time as _time
     import uuid as _uuid
 
-    from confluent_kafka_streams_examples_spark.streaming.processor import (
-        running_total_bucketed,
-    )
-
     src = str(tmp_path / "src")
     write_batch(spark, src, [("a", 5.0, ts(0)), ("c", 2.0, ts(0))])
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
@@ -736,7 +768,7 @@ def test_bucketed_punctuator_toggle_on_restart(spark, tmp_path):
     # (foreachBatch, not the memory sink — memory cannot recover from a
     # checkpoint, and phase 2 restarts from this one)
     q = (
-        running_total_bucketed(stream, "key", "value", n_buckets=1)
+        running_total_with_emission(stream, "key", "value", n_buckets=1)
         .writeStream.foreachBatch(sink)
         .outputMode("update")
         .option("checkpointLocation", ckpt)
@@ -753,7 +785,7 @@ def test_bucketed_punctuator_toggle_on_restart(spark, tmp_path):
     stream2 = spark.readStream.schema(EVENT_SCHEMA).parquet(src)
     write_batch(spark, src, [("a", 1.0, ts(1))])
     q2 = (
-        running_total_bucketed(
+        running_total_with_emission(
             stream2, "key", "value", n_buckets=1, emit_every_ms=100
         )
         .writeStream.foreachBatch(sink)

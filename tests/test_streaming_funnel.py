@@ -2,7 +2,9 @@
 
 The contract documented in streaming/funnel.py: an event-time-ordered
 replay reproduces the batch ``funnel_conversion`` query exactly; state
-is three longs per user; stage times only refine monotonically."""
+is three longs per user; stage times only refine monotonically.  A
+pure-Python per-user reference of the at-arrival fold pins the bucketed
+state layout to per-user semantics on a random stream."""
 
 from __future__ import annotations
 
@@ -22,18 +24,16 @@ import pytest
 
 from confluent_kafka_streams_examples_spark.streaming.funnel import (
     funnel_stage_stream,
-    funnel_stage_stream_bucketed,
 )
 
-# Every contract test runs against BOTH implementations: the per-user
-# fold and the bucketed-state fast path (packed per-bucket user vector,
-# numpy min-cascade — streaming/funnel.py) are required to be
-# semantically indistinguishable; only the state layout differs.
+# Every contract test runs against both bucket layouts of the one fold:
+# at the default 1024 buckets each fixture user hashes to a bucket of
+# its own (per-user state), at 8 buckets users share bucket state (the
+# packed per-bucket vector the fold is built for).  Only the layout may
+# differ; the semantics must not.
 IMPLS = [
     pytest.param(funnel_stage_stream, id="per_user"),
-    pytest.param(
-        lambda st: funnel_stage_stream_bucketed(st, n_buckets=8), id="bucketed"
-    ),
+    pytest.param(lambda st: funnel_stage_stream(st, n_buckets=8), id="bucketed"),
 ]
 
 SCHEMA = StructType(
@@ -59,7 +59,7 @@ def _drive(spark, tmp_path, batches, impl=funnel_stage_stream):
     # triggering query between processAllAvailable calls, splitting one
     # logical batch across two microbatches at a random point; the
     # at-arrival folds are batch-boundary-sensitive, so that race made
-    # the per-user/bucketed differential flake (~1 in 3 under load)
+    # the random-stream differential flake (~1 in 3 under load)
     spark.createDataFrame(batches[0], SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(src)
@@ -194,8 +194,8 @@ def test_funnel_stream_state_survives_restart(spark, tmp_path, impl):
     """Checkpointed state recovery (the reference's persistent
     KeyValueStore + changelog restore, ProcessorApiExample.scala:74-78):
     a view folded before shutdown must admit a click arriving after a
-    cold restart from the same checkpoint — for the bucketed variant
-    this also proves the packed blob round-trips the state store."""
+    cold restart from the same checkpoint — which also proves the
+    packed bucket blob round-trips the state store."""
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt_restart")
     out = str(tmp_path / "out")
@@ -253,11 +253,41 @@ def test_funnel_stream_null_user_is_poison_guarded(spark, tmp_path, impl):
     assert [(r["user_id"], r["stage"]) for r in rows] == [(31, 2)]
 
 
+def _per_user_reference(batches):
+    """At-arrival fold, one user at a time and batch by batch: the
+    per-batch min-cascade (t1 = min over views; t2 = min over clicks
+    after t1; t3 = min over purchases after t2), with no state until a
+    user's first qualifying view.  Returns user -> (stage, t1, t2, t3)
+    in epoch micros, the shape of the streamed update rows."""
+    def stage_min(prev, evs, etype, gate):
+        times = [t for e, t in evs if e == etype and t > gate]
+        return min(times + ([] if prev is None else [prev]), default=None)
+
+    state = {}
+    for batch in batches:
+        by_user = {}
+        for u, etype, t in batch:
+            if u is not None and t is not None:
+                t_us = int(t.timestamp() * 1_000_000)
+                by_user.setdefault(u, []).append((etype, t_us))
+        for u, evs in by_user.items():
+            t1, t2, t3 = state.get(u, (None, None, None))
+            n1 = stage_min(t1, evs, "view", -1)
+            n2 = t2 if n1 is None else stage_min(t2, evs, "click", n1)
+            n3 = t3 if n2 is None else stage_min(t3, evs, "purchase", n2)
+            if n1 is not None:
+                state[u] = (n1, n2, n3)
+    return {
+        u: (3 if t3 is not None else (2 if t2 is not None else 1), t1, t2, t3)
+        for u, (t1, t2, t3) in state.items()
+    }
+
+
 def test_funnel_bucketed_equals_per_user_on_random_stream(spark, tmp_path):
     """Differential contract: over a seeded random multi-batch stream
     spanning many users per bucket, the bucketed fold's final per-user
-    (stage, t1, t2, t3) must equal the per-user fold's exactly — the
-    bucketing is physical layout only."""
+    (stage, t1, t2, t3) must equal the pure-Python per-user reference
+    exactly — the bucketing is physical layout only."""
     import random
 
     rng = random.Random(42)
@@ -274,32 +304,23 @@ def test_funnel_bucketed_equals_per_user_on_random_stream(spark, tmp_path):
             )
         batches.append(batch)
 
-    def final_state(rows):
-        # update-mode refinement is monotone (stage never regresses,
-        # stage times only decrease), so the final state per user is
-        # the max stage with the min observed time per stage column
-        best = {}
-        for r in rows:
-            s, t1, t2, t3 = best.get(r["user_id"], (0, None, None, None))
-            mn = lambda a, b: b if a is None else (a if b is None else min(a, b))
-            best[r["user_id"]] = (
-                max(s, r["stage"]),
-                mn(t1, r["t1_us"]),
-                mn(t2, r["t2_us"]),
-                mn(t3, r["t3_us"]),
-            )
-        return best
-
-    per_user = final_state(_drive(spark, tmp_path / "pu", batches))
-    bucketed = final_state(
-        _drive(
-            spark,
-            tmp_path / "bk",
-            batches,
-            lambda st: funnel_stage_stream_bucketed(st, n_buckets=8),
-        )
+    # update-mode refinement is monotone (stage never regresses, stage
+    # times only decrease), so the final state per user is the max
+    # stage with the min observed time per stage column
+    best = {}
+    mn = lambda a, b: b if a is None else (a if b is None else min(a, b))
+    rows = _drive(
+        spark, tmp_path, batches, lambda st: funnel_stage_stream(st, n_buckets=8)
     )
-    assert per_user == bucketed
+    for r in rows:
+        s, t1, t2, t3 = best.get(r["user_id"], (0, None, None, None))
+        best[r["user_id"]] = (
+            max(s, r["stage"]),
+            mn(t1, r["t1_us"]),
+            mn(t2, r["t2_us"]),
+            mn(t3, r["t3_us"]),
+        )
+    assert best == _per_user_reference(batches)
 
 
 def test_funnel_exact_readmits_after_late_view_where_conservative_cannot(
