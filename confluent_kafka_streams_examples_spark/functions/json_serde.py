@@ -3,8 +3,9 @@
 The reference serializes entities to compact JSON bytes and deserializes
 with failure -> None + log (records silently dropped, circe.scala:15-23).
 Spark equivalent: ``from_json`` yields null on malformed input; the
-deserialize helper drops those rows (DROPMALFORMED) or routes them to a
-dead-letter DataFrame (see streaming.errors for the counted policy E1).
+deserialize helper drops those rows (DROPMALFORMED) and
+``malformed_records`` routes them to a dead-letter DataFrame (see
+streaming.errors for the counted policy E1).
 """
 
 from __future__ import annotations
@@ -29,21 +30,17 @@ def deserialize_json(
     value_col: str,
     schema: StructType,
     *,
-    drop_malformed: bool = True,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Parse a JSON string/binary column into typed columns.
 
     Matches the reference's drop-on-decode-failure policy: malformed
-    rows are filtered out when ``drop_malformed`` (the default,
-    circe.scala:15-23).  PERMISSIVE ``from_json`` yields an ALL-NULL
-    struct (not a null struct) for malformed input, so "malformed"
-    means struct-null OR every field null.  Pass
-    ``drop_malformed=False`` to keep them for dead-letter routing.
+    rows are filtered out (circe.scala:15-23).  PERMISSIVE ``from_json``
+    yields an ALL-NULL struct (not a null struct) for malformed input,
+    so "malformed" means struct-null OR every field null.
     """
     parsed = df.withColumn("_parsed", F.from_json(F.col(value_col).cast("string"), schema))
-    if drop_malformed:
-        parsed = parsed.filter(~_malformed_cond(schema))
+    parsed = parsed.filter(~_malformed_cond(schema))
     keep = [F.col(c) for c in keep_cols]
     return parsed.select(*keep, F.col("_parsed.*"))
 

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from confluent_kafka_streams_examples_spark.functions.json_serde import _malformed_cond
+
 
 class DeserializationThresholdExceeded(RuntimeError):
     """Raised when cumulative malformed-record count crosses the limit
@@ -82,14 +84,7 @@ class DeadLetterPolicy:
         parsed = batch_df.withColumn(
             "_parsed", F.from_json(F.col(self.value_col).cast("string"), self.schema)
         )
-        # PERMISSIVE from_json yields an ALL-NULL struct (not a null
-        # struct) for malformed input — malformed := struct null or
-        # every field null (circe decode-failure parity: a record
-        # missing all expected fields is equally undecodable)
-        all_null = F.lit(True)
-        for f in self.schema.fields:
-            all_null = all_null & F.col(f"_parsed.{f.name}").isNull()
-        bad_cond = F.col("_parsed").isNull() | all_null
+        bad_cond = _malformed_cond(self.schema)
         bad = parsed.filter(bad_cond)
         n_bad = bad.count()
         if n_bad:

@@ -51,13 +51,14 @@ class StreamApp:
         assert self.query is not None, "call start() first"
         deadline = None if timeout is None else time.monotonic() + timeout
         while True:
-            remaining = None if deadline is None else max(0.0, deadline - time.monotonic())
+            remaining = None if deadline is None else deadline - time.monotonic()
             try:
                 if remaining is None:
                     self.query.awaitTermination()
-                    return True
-                finished = self.query.awaitTermination(remaining)
-                return finished or True
+                elif remaining > 0:
+                    # PySpark rejects a non-positive timeout
+                    self.query.awaitTermination(remaining)
+                return True
             except Exception as exc:  # StreamingQueryException
                 if is_transient(exc) and self.restarts < self.max_restarts:
                     # REPLACE_THREAD: rebuild the query; checkpoint resumes

@@ -1,10 +1,6 @@
 from __future__ import annotations
 
-import os
-
 import pytest
-
-os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # smaller local parallelism for test latency
 
 from confluent_kafka_streams_examples_spark.session import get_spark
 

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 
 def test_artifact_path_tracks_source_version_and_params(tmp_path):
@@ -464,7 +465,8 @@ def test_materialized_write_parallelism_tracks_est_bytes(tmp_path, spark):
     """The artifact writer's FILE COUNT must follow the size estimate:
     a small estimate publishes without a repartition (single-digit
     files from the plan's own partitioning), a large one publishes a
-    parallel multi-file layout — asserted at two probe estimates."""
+    parallel multi-file layout — asserted at two probe estimates, plus
+    a partitioned probe at the large one."""
     from confluent_kafka_streams_examples_spark.artifacts import (
         TARGET_FILE_BYTES,
         materialized,
@@ -487,3 +489,14 @@ def test_materialized_write_parallelism_tracks_est_bytes(tmp_path, spark):
         est_bytes=3 * TARGET_FILE_BYTES,
     )
     assert len(parquet_files(big)) == 4
+
+    # a partitioned artifact scales too: hashing on the layout column
+    # writes one file per list_id directory, not one per task
+    parted = materialized(
+        spark, str(src), "probe|parted",
+        lambda: build().selectExpr("doc_id", "doc_id % 3 AS list_id"),
+        partition_by="list_id",
+        est_bytes=3 * TARGET_FILE_BYTES,
+    )
+    files_per_dir = Counter(os.path.dirname(f) for f in parted.inputFiles())
+    assert len(files_per_dir) == 3 and set(files_per_dir.values()) == {1}

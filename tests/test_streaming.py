@@ -7,6 +7,7 @@ dead-letter policies, restart-on-transient lifecycle.
 from __future__ import annotations
 
 import datetime as dt
+import time
 import uuid
 
 import pytest
@@ -313,12 +314,17 @@ def test_lifecycle_restart_on_transient():
     transient error -> REPLACE_THREAD (restart); fatal -> propagate."""
 
     class FakeQuery:
-        def __init__(self, fail_with=None):
+        def __init__(self, fail_with=None, fail_after=0.0):
             self.fail_with = fail_with
+            self.fail_after = fail_after
             self.isActive = False
 
         def awaitTermination(self, timeout=None):
+            if timeout is not None and timeout <= 0:
+                # PySpark's VALUE_NOT_POSITIVE check
+                raise ValueError(f"timeout must be positive, got {timeout}")
             if self.fail_with:
+                time.sleep(self.fail_after)
                 err, self.fail_with = self.fail_with, None
                 raise err
             return True
@@ -339,6 +345,24 @@ def test_lifecycle_restart_on_transient():
     assert app.await_termination(timeout=5)
     assert app.restarts == 1 and len(calls) == 2
     assert states == ["RUNNING", "RESTARTING", "RUNNING"]
+
+    # the transient failure outlives the timeout: the restarted query
+    # is healthy and no time remains, so the await is a healthy timeout
+    late_calls = []
+
+    def make_late_query():
+        late_calls.append(1)
+        if len(late_calls) == 1:
+            return FakeQuery(RuntimeError("Transient error! please retry"), fail_after=0.3)
+        return FakeQuery()
+
+    late_states = []
+    late_app = StreamApp(
+        make_late_query, max_restarts=3, on_state_change=late_states.append
+    ).start()
+    assert late_app.await_termination(timeout=0.2)
+    assert late_app.restarts == 1 and len(late_calls) == 2
+    assert late_states == ["RUNNING", "RESTARTING", "RUNNING"]
 
     fatal_app = StreamApp(lambda: FakeQuery(RuntimeError("boom")), max_restarts=3).start()
     with pytest.raises(RuntimeError, match="boom"):
